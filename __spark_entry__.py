@@ -521,7 +521,7 @@ def _q_hybrid_poly4096(spark: SparkSession, sf_dir: str) -> DataFrame:
     from raster_join_spark.operators.spatial_join import SpatialJoin
 
     sj = SpatialJoin(spark, rect_polyset(), COARSE_GRID)
-    return sj.hybrid_join(_points(spark, sf_dir), coord_transfer="int")
+    return sj.hybrid_join(_points(spark, sf_dir), coord_transfer="packed")
 
 
 def _q_index_f32(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -72,7 +72,9 @@ class PolyGridTables:
     ) -> float:
         """Share of covered (cell, poly) pairs that are boundary pairs —
         the estimate of the share of points needing the exact PIP
-        kernel. Used by hybrid_join's plan auto-select.
+        kernel. SpatialJoin's ``refine="auto"`` reads the pair-count
+        ratio to decide whether to refine the classification grid; no
+        hybrid_join plan choice reads it.
 
         Without ``cell_weights``: a pure pair-count ratio (free,
         data-independent) that assumes near-uniform density per covered
@@ -85,8 +87,8 @@ class PolyGridTables:
         per-cell point histogram — each pair is weighted by its cell's
         point count, so the estimate tracks where the DATA is, not where
         the cells are. Cells absent from the histogram weigh 0.
-        Mis-estimation is performance-only either way (both plans are
-        exact; fused is the safe fallback)."""
+        Mis-estimation is performance-only either way (refinement never
+        changes results)."""
         if cell_weights is None:
             nb = int((self.cls_kind == BOUNDARY).sum())
             return nb / max(len(self.cls_kind), 1)

@@ -632,12 +632,12 @@ def knn_join_bulk(
         # than every kernel below combined). Cache the PROJECTED three
         # columns — far smaller than the source table — and derive every
         # grid assignment (including the refined grid) from the cache.
-        # (r8) the .rdd.getNumPartitions() under-parallelism guard that
-        # used to live here cost ~0.5-1s of pure driver time per call
-        # (full physical planning of the source just to read a number);
-        # source parallelism is the source's job now — points_df
-        # repartitions single-row-group files itself, and synth/test
-        # sources already carry >= parallelism partitions.
+        # Nothing repartitions here or in the source: the persisted
+        # projection keeps the source's partitioning, i.e. ONE partition
+        # for points_df (events.parquet is one row group) and >=
+        # parallelism partitions for synth/test sources. (An
+        # .rdd.getNumPartitions() guard costs ~0.5-1s of driver time per
+        # call: full physical planning of the source to read a number.)
         pts_base = points.select(id_col, x, y).persist()
 
         def _assign(g: GridSpec) -> DataFrame:

@@ -15,6 +15,8 @@
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -24,6 +26,16 @@ from pyspark.sql import types as T
 def _sq(col: str) -> str:
     """Backtick-quote a possibly alias-qualified column for Spark SQL."""
     return ".".join(f"`{p}`" for p in col.split("."))
+
+
+def _coef(v) -> str:
+    """A coefficient as a SQL numeric literal. NaN and inf have none
+    (Spark fails to parse ``nanD``/``infD``), so they are refused here,
+    by value."""
+    f = float(v)
+    if not math.isfinite(f):
+        raise ValueError(f"non-finite coefficient {f!r} cannot be rendered into SQL")
+    return repr(f)
 
 
 def _fold_add(terms: list[str]) -> str:
@@ -48,7 +60,7 @@ def dot_expr(col: str, q: np.ndarray) -> Column:
     generated-SQL oracle stays hash-exact — gate-verified."""
     c = _sq(col)
     terms = [
-        f"CAST({c}[{i}] AS DOUBLE) * {float(qi)!r}D"
+        f"CAST({c}[{i}] AS DOUBLE) * {_coef(qi)}D"
         for i, qi in enumerate(np.asarray(q, dtype=np.float64))
     ]
     return F.expr(_fold_add(terms))
@@ -56,7 +68,7 @@ def dot_expr(col: str, q: np.ndarray) -> Column:
 
 def dot_sql(col: str, q: np.ndarray) -> str:
     terms = [
-        f"CAST({col}[{i + 1}] AS DOUBLE) * {float(qi)!r}"
+        f"CAST({col}[{i + 1}] AS DOUBLE) * {_coef(qi)}"
         for i, qi in enumerate(np.asarray(q, dtype=np.float64))
     ]
     out = terms[0]
@@ -133,7 +145,7 @@ def lsh_bucket_col(vec_col: str, planes: np.ndarray) -> Column:
     def _proj(plane: np.ndarray) -> str:
         return _fold_add(
             [
-                f"CAST({c}[{i}] AS DOUBLE) * {float(qi)!r}D"
+                f"CAST({c}[{i}] AS DOUBLE) * {_coef(qi)}D"
                 for i, qi in enumerate(np.asarray(plane, dtype=np.float64))
             ]
         )

@@ -57,12 +57,6 @@ from raster_join_spark.geo.grid import GridSpec
 from raster_join_spark.geo.pip import pip_candidates
 from raster_join_spark.geo.polygons import PolygonSet
 
-# pip_col's unrolled CASE chain costs O(n_polys) dispatch per row and
-# O(polys x edges) codegen'd expression tree — measured viable only to a
-# few hundred polygons; past this bound callers must use the Arrow
-# kernel (which is also faster there; BENCH/poly_scaling.md)
-PIP_COL_MAX_POLYS = 512
-
 
 def _cell_csr(cells: np.ndarray, polys: np.ndarray, n_cells: int | None = None) -> dict:
     """Sort (cell, poly) pairs by cell into a lookup. ``starts`` is
@@ -139,21 +133,34 @@ def _csr_expand(csr: dict, cells: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 @dataclass(frozen=True)
 class AggSpec:
     """Aggregation parity with the reference (Common.h:26 {Count, Avg, Sum},
-    DataHandler.cpp:68-71). ``col=None`` -> COUNT(*)."""
+    DataHandler.cpp:68-71). ``col=None`` -> COUNT(*); sum and avg need a
+    column. Validated at construction: every plan below branches on
+    ``op`` with avg as the fall-through, so an unknown op or a missing
+    column would otherwise run as a silently wrong aggregate."""
 
     op: str = "count"  # count | sum | avg
     col: str | None = None
     alias: str = "agg"
 
-    def exprs(self, cnt_col: str = "_cnt", sum_col: str = "_sum") -> list[Column]:
-        """Final-stage expressions over per-cell partials."""
+    def __post_init__(self) -> None:
+        if self.op not in ("count", "sum", "avg"):
+            raise ValueError(f"AggSpec op must be count, sum or avg, got {self.op!r}")
+        if self.op != "count" and self.col is None:
+            raise ValueError(f"AggSpec({self.op!r}) needs a value column")
+
+    def partials(self) -> list[Column]:
+        """Map-side partial expressions: ``_cnt`` and ``_sum`` (NULL
+        without a value column), the input of :meth:`exprs`."""
+        s = F.sum(F.col(self.col)) if self.col else F.lit(None).cast("double")
+        return [F.count(F.lit(1)).alias("_cnt"), s.alias("_sum")]
+
+    def exprs(self) -> list[Column]:
+        """Final-stage expressions over the partials."""
         if self.op == "count":
-            return [F.sum(cnt_col).alias(self.alias)]
+            return [F.sum("_cnt").alias(self.alias)]
         if self.op == "sum":
-            return [F.sum(sum_col).alias(self.alias)]
-        if self.op == "avg":
-            return [(F.sum(sum_col) / F.sum(cnt_col)).alias(self.alias)]
-        raise ValueError(f"unknown agg {self.op}")
+            return [F.sum("_sum").alias(self.alias)]
+        return [(F.sum("_sum") / F.sum("_cnt")).alias(self.alias)]
 
 
 class SpatialJoin:
@@ -180,7 +187,6 @@ class SpatialJoin:
     REFINE_TARGET_SPAN = 8.0  # aim: median polygon spans ~8 refined cells/axis
     REFINE_MAX_K = 8
     REFINE_COVER_BUDGET = 12_000_000  # driver classify cost cap (MBR-cover pairs)
-    MIN_SAMPLE_PTS = 256  # sampled-bfrac floor before escalating to a full scan
 
     def __init__(
         self,
@@ -200,7 +206,7 @@ class SpatialJoin:
         matches the SQL oracle bit-for-bit.
 
         ``refine``: the internal classification-grid refinement factor
-        for the EXACT (hybrid/pairs) paths — ``"auto"`` (default) picks
+        for the EXACT (hybrid/assign) paths — ``"auto"`` (default) picks
         a power-of-two factor when the polygon collection is tiny
         relative to the query grid (see the class constants), ``1``
         disables, an int forces a factor. Results are identical at any
@@ -319,32 +325,34 @@ class SpatialJoin:
     _BC_CACHE: dict[tuple, object] = {}
     _BC_CACHE_MAX = 16
 
-    def _bc_art(self):
-        """The per-executor membership artifact (interior CSR, boundary
-        CSR, flat polygon vertices), broadcast once per (session,
-        collection content, grid, dtype, refine_k) and shared by every
-        Arrow-kernel plan (fused partials, fused pairs, split boundary
-        stage)."""
+    def _bc_cached(self, tag: tuple, build):
+        """Broadcast ``build()`` once per (session, collection content,
+        grid, dtype, refine_k, ``tag``) through the LRU above."""
         key = (
             id(self.spark),
             self.polyset.cache_token,
             self.grid,
             np.dtype(self.dtype).char,
             self.refine_k,
-        )
+        ) + tag
         bc = self._BC_CACHE.pop(key, None)
-        if bc is not None:
-            self._BC_CACHE[key] = bc  # reinsert: most-recently-used
-            return bc
-        bc = self.spark.sparkContext.broadcast(self._bc_art_dict())
-        while len(self._BC_CACHE) >= self._BC_CACHE_MAX:
-            old = self._BC_CACHE.pop(next(iter(self._BC_CACHE)))
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass  # session already stopped
-        self._BC_CACHE[key] = bc
+        if bc is None:
+            bc = self.spark.sparkContext.broadcast(build())
+            while len(self._BC_CACHE) >= self._BC_CACHE_MAX:
+                old = self._BC_CACHE.pop(next(iter(self._BC_CACHE)))
+                try:
+                    old.unpersist(blocking=False)
+                except Exception:
+                    pass  # session already stopped
+        self._BC_CACHE[key] = bc  # (re)insert: most-recently-used
         return bc
+
+    def _bc_art(self):
+        """The per-executor membership artifact (interior CSR, boundary
+        CSR, flat polygon vertices) shared by every Arrow-kernel plan
+        (fused partials, per-point pairs, single-level split boundary
+        stage)."""
+        return self._bc_cached((), self._bc_art_dict)
 
     def _bc_art_dict(self) -> dict:
         """The artifact value behind :meth:`_bc_art` — exposed so size
@@ -364,15 +372,14 @@ class SpatialJoin:
         self,
         cell: np.ndarray,
         poly: np.ndarray,
+        cache_key: str,
         extra: dict | None = None,
-        cache_key: str | None = None,
     ) -> DataFrame:
-        if cache_key is not None:
-            key = (id(self.spark), self.polyset.cache_token, self.grid, cache_key)
-            hit = self._PAIRS_CACHE.pop(key, None)
-            if hit is not None:
-                self._PAIRS_CACHE[key] = hit  # reinsert: most-recently-used
-                return hit
+        key = (id(self.spark), self.polyset.cache_token, self.grid, cache_key)
+        hit = self._PAIRS_CACHE.pop(key, None)
+        if hit is not None:
+            self._PAIRS_CACHE[key] = hit  # reinsert: most-recently-used
+            return hit
         data = {"cell_id": cell.astype(np.int64), "poly_id": poly.astype(np.int64)}
         for k, (arr, _) in (extra or {}).items():
             data[k] = arr
@@ -398,16 +405,15 @@ class SpatialJoin:
         # this is broadcast-side constant data like the _BC_CACHE CSR
         # artifact, LRU-bounded the same way. ~4M rows per partition
         # keeps a budget-sized map's one-time build parallel enough.
-        if cache_key is not None:
-            # persist only cached frames — the LRU owns the unpersist
-            df = df.coalesce(max(1, len(cell) // 4_000_000 + 1)).persist()
-            while len(self._PAIRS_CACHE) >= 64:  # LRU: evict coldest only
-                old = self._PAIRS_CACHE.pop(next(iter(self._PAIRS_CACHE)))
-                try:
-                    old.unpersist(blocking=False)
-                except Exception:
-                    pass
-            self._PAIRS_CACHE[key] = df
+        # The LRU owns the unpersist.
+        df = df.coalesce(max(1, len(cell) // 4_000_000 + 1)).persist()
+        while len(self._PAIRS_CACHE) >= 64:  # LRU: evict coldest only
+            old = self._PAIRS_CACHE.pop(next(iter(self._PAIRS_CACHE)))
+            try:
+                old.unpersist(blocking=False)
+            except Exception:
+                pass
+        self._PAIRS_CACHE[key] = df
         return df
 
     _CELLS_CACHE: dict[tuple, DataFrame] = {}
@@ -472,85 +478,17 @@ class SpatialJoin:
 
         return df.filter(_pip(F.col(self.x), F.col(self.y), F.col("poly_id")))
 
-    def pip_col(self, poly_id_col: Column) -> Column:
-        """Exact ray-cast PIP as a PURE JVM column expression: for each
-        polygon an unrolled crossing-parity sum (identical IEEE op order
-        as geo/pip.py and the SQL oracle), dispatched by poly_id through
-        a CASE chain. Whole-stage-codegen'd — no python anywhere. Viable
-        for collections up to a few hundred polygons (expression size
-        grows as polys x edges; codegen splits long methods) — GUARDED:
-        raises above PIP_COL_MAX_POLYS, where the CASE chain's linear
-        dispatch and expression-tree size make it strictly worse than the
-        Arrow kernel (callers like hybrid_join(fused="jvm") fall back
-        automatically)."""
-        if self.polyset.n_polys > PIP_COL_MAX_POLYS:
-            raise ValueError(
-                f"pip_col unrolls one CASE branch per polygon: "
-                f"{self.polyset.n_polys} polygons exceeds the "
-                f"{PIP_COL_MAX_POLYS}-polygon viability bound (linear "
-                "CASE dispatch per row + codegen tree blowup). Use the "
-                "Arrow PIP kernel (hybrid_join fused=True / index_join)."
-            )
-        x = F.col(self.x).cast("double")
-        y = F.col(self.y).cast("double")
-        result: Column | None = None
-        for p in range(self.polyset.n_polys):
-            v = self.polyset.poly_verts(p)
-            nv = len(v)
-            if nv < 3:
-                inside = F.lit(False)
-            else:
-                acc: Column | None = None
-                for i in range(nv):
-                    j = (i - 1) % nv
-                    vix, viy = float(v[i, 0]), float(v[i, 1])
-                    vjx, vjy = float(v[j, 0]), float(v[j, 1])
-                    straddle = (F.lit(viy) > y) != (F.lit(vjy) > y)
-                    xcross = (
-                        F.lit(vjx - vix) * (y - F.lit(viy)) / F.lit(vjy - viy)
-                        + F.lit(vix)
-                    )
-                    term = F.when(straddle & (x < xcross), F.lit(1)).otherwise(F.lit(0))
-                    acc = term if acc is None else acc + term
-                inside = acc % 2 == 1
-            result = (
-                F.when(poly_id_col == p, inside)
-                if result is None
-                else result.when(poly_id_col == p, inside)
-            )
-        assert result is not None
-        return result.otherwise(F.lit(False))
-
-    def _cell_partials(
-        self, points: DataFrame, agg: AggSpec, grid: GridSpec | None = None
-    ) -> DataFrame:
+    def _cell_partials(self, points: DataFrame, agg: AggSpec) -> DataFrame:
         """Point 'rasterization': per-cell partial aggregates
         (RasterJoin.cpp:215-221's additive-blend canvas as a hash agg
-        with map-side combine). ``grid`` overrides the keying grid (the
-        split plan keys on the internal classification grid)."""
-        g = grid or self.grid
-        pts = points.withColumn(
-            "cell_id", g.cell_id_col(F.col(self.x), F.col(self.y))
-        ).filter(F.col("cell_id").isNotNull())
-        sum_col = (
-            F.sum(F.col(agg.col)).alias("_sum")
-            if agg.col
-            else F.lit(None).cast("double").alias("_sum")
-        )
-        return pts.groupBy("cell_id").agg(F.count(F.lit(1)).alias("_cnt"), sum_col)
+        with map-side combine)."""
+        pts = self.with_cell(points).filter(F.col("cell_id").isNotNull())
+        return pts.groupBy("cell_id").agg(*agg.partials())
 
-    def _finalize(
-        self, assigned: DataFrame, agg: AggSpec, include_zero: bool = True
-    ) -> DataFrame:
-        """groupBy(poly_id) final aggregation + densify to all polygons
-        (the reference emits every polygon position 0..N-1,
-        RasterJoin/main.cpp:202-224)."""
-        if agg.op == "count":
-            out = assigned.groupBy("poly_id").agg(F.count(F.lit(1)).alias(agg.alias))
-        elif agg.op == "sum":
-            out = assigned.groupBy("poly_id").agg(F.sum(agg.col).alias(agg.alias))
-        else:  # avg
-            out = assigned.groupBy("poly_id").agg(F.avg(agg.col).alias(agg.alias))
+    def _densify(self, out: DataFrame, agg: AggSpec, include_zero: bool) -> DataFrame:
+        """Densify a per-polygon aggregate to all polygons (the reference
+        emits every polygon position 0..N-1, RasterJoin/main.cpp:202-224):
+        absent polygons count 0, their sum/avg is NULL."""
         if not include_zero:
             return out
         all_polys = self.spark.range(self.polyset.n_polys).withColumnRenamed(
@@ -574,19 +512,24 @@ class SpatialJoin:
         pts = self.with_cell(points)
         joined = pts.join(F.broadcast(cand), "cell_id", "inner")
         exact = self._pip_filter(joined)
-        return self._finalize(exact, agg, include_zero)
+        if agg.op == "count":
+            e = F.count(F.lit(1))
+        elif agg.op == "sum":
+            e = F.sum(agg.col)
+        else:
+            e = F.avg(agg.col)
+        return self._densify(
+            exact.groupBy("poly_id").agg(e.alias(agg.alias)), agg, include_zero
+        )
 
     def assign_polygons(
-        self, points: DataFrame, cols: Iterable[str] = ("url",), fused: bool = True
+        self, points: DataFrame, cols: Iterable[str] = ("url",)
     ) -> DataFrame:
         """Per-point polygon assignment (the north_star's per-point tile
         assignment output): exact hybrid-path resolution, one row per
-        (point, containing polygon). The fused form emits pairs from one
-        Arrow pass (no JVM pair materialization + re-filter)."""
-        if fused:
-            return self._fused_pairs(points, list(cols))
-        pairs = self._exact_pairs(points)
-        return pairs.select(*cols, "cell_id", "poly_id")
+        (point, containing polygon), emitted from one Arrow pass (no JVM
+        pair materialization + re-filter)."""
+        return self._fused_pairs(points, list(cols))
 
     def _fused_pairs(self, points: DataFrame, cols: list[str]) -> DataFrame:
         """One mapInArrow pass: per batch, interior memberships via CSR
@@ -657,140 +600,38 @@ class SpatialJoin:
             src = src.coalesce(2 * target)
         return src.mapInArrow(fn, schema)
 
-    def _exact_pairs(self, points: DataFrame, jvm_pip: bool = False) -> DataFrame:
-        """Hybrid-path exact (point, poly) pairs: interior cells skip PIP
-        (hybrid.glsl:224-301's non-border fast path), boundary cells get
-        the exact kernel (isBorder branch, hybrid.glsl:173-185) — either
-        the Arrow numpy kernel or the all-JVM unrolled expression.
-        Membership joins key on the internal classification grid; the
-        exposed cell_id column stays the caller's grid."""
-        t = self.cls_tables
-        int_c, int_p = t.interior_pairs()
-        b_c, b_p, _, _ = t.boundary_pairs()
-        interior = self._pairs_df(int_c, int_p, cache_key=self._ck("interior"))
-        boundary = self._pairs_df(b_c, b_p, cache_key=self._ck("boundary"))
-
-        pts = self.with_cell(points).filter(F.col("cell_id").isNotNull())
-        if self.refine_k > 1:
-            pts = pts.withColumn(
-                "_rcell", self.cls_grid.cell_id_col(F.col(self.x), F.col(self.y))
-            )
-            interior = interior.withColumnRenamed("cell_id", "_rcell")
-            boundary = boundary.withColumnRenamed("cell_id", "_rcell")
-            key = "_rcell"
-        else:
-            key = "cell_id"
-        fast = pts.join(F.broadcast(interior), key, "inner")
-        slow = pts.join(F.broadcast(boundary), key, "inner")
-        if jvm_pip:
-            slow = slow.filter(self.pip_col(F.col("poly_id")))
-        else:
-            slow = self._pip_filter(slow)
-        out = fast.unionByName(slow)
-        return out.drop("_rcell") if self.refine_k > 1 else out
-
-    def _sampled_boundary_fraction(
-        self, points: DataFrame, fraction: float = 0.01, seed: int = 7
-    ) -> float:
-        """Point-weighted boundary share from a sampled scan: a
-        ``fraction`` sample of the input broadcast-joins a per-cell
-        (boundary pairs, total pairs) table derived from the
-        classification grid, and the estimate is sum(nb)/sum(nt) — i.e.
-        each sampled point weighs its cell's pairs. Weighting by where
-        the POINTS are, not where the cells are, keeps hot-boundary-cell
-        skew from fooling the plan auto-select (round-4 verdict item 5):
-        the fixture's NYC-style hot box puts 30% of points in a handful
-        of cells, and when those are boundary cells the pure pair-count
-        ratio underestimates the true PIP share severalfold. One tiny
-        scalar aggregate — no driver-side histogram, scale-independent.
-        Falls back to the data-independent pair-count ratio when the
-        sample misses every covered cell. A sample that lands fewer than
-        ``MIN_SAMPLE_PTS`` covered points is noise (a 1%% draw over a
-        small test input can be ~40 points), so the estimate re-runs as
-        a full scan — the input is memory-cached whenever this runs (the
-        auto rule's precondition), so the retry is one cheap cached
-        pass and only small inputs ever take it."""
-        wkey = (id(self.spark), self.polyset.cache_token, self.grid, self._ck("wdf"))
-        wdf = self._PAIRS_CACHE.get(wkey)
-        if wdf is None:
-            t = self.cls_tables
-            uniq, inv = np.unique(t.cls_cell, return_inverse=True)
-            nt = np.bincount(inv, minlength=len(uniq)).astype(np.float64)
-            nb = np.bincount(
-                inv,
-                weights=(t.cls_kind == BOUNDARY).astype(np.float64),
-                minlength=len(uniq),
-            )
-            wdf = self.spark.createDataFrame(
-                pd.DataFrame(
-                    {"cell_id": uniq.astype(np.int64), "_nb": nb, "_nt": nt}
-                ),
-                schema=T.StructType(
-                    [
-                        T.StructField("cell_id", T.LongType(), False),
-                        T.StructField("_nb", T.DoubleType(), False),
-                        T.StructField("_nt", T.DoubleType(), False),
-                    ]
-                ),
-            )
-            while len(self._PAIRS_CACHE) >= 64:  # LRU: evict coldest only
-                self._PAIRS_CACHE.pop(next(iter(self._PAIRS_CACHE)))
-            self._PAIRS_CACHE[wkey] = wdf
-
-        def _scan(fr: float):
-            src = points if fr >= 1.0 else points.sample(fraction=fr, seed=seed)
-            return (
-                src.withColumn(
-                    "cell_id",
-                    self.cls_grid.cell_id_col(F.col(self.x), F.col(self.y)),
-                )
-                .join(F.broadcast(wdf), "cell_id", "inner")
-                .agg(
-                    F.sum("_nb").alias("nb"),
-                    F.sum("_nt").alias("nt"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .collect()[0]
-            )
-
-        row = _scan(fraction)
-        if row["n"] < self.MIN_SAMPLE_PTS and fraction < 1.0:
-            row = _scan(1.0)
-        if not row["nt"]:
-            # sample missed every covered cell: fall back to the
-            # data-independent pair-count ratio (self.cls_tables, NOT a
-            # local from the cache-miss branch — the weight table is
-            # usually served from _PAIRS_CACHE and that branch never ran)
-            return self.cls_tables.boundary_fraction()
-        return float(row["nb"]) / float(row["nt"])
-
     def hybrid_join(
         self,
         points: DataFrame,
         agg: AggSpec = AggSpec(),
         include_zero: bool = True,
-        fused: bool = True,
+        fused: bool | str = True,
         coord_transfer: str | None = None,
         stats: dict | None = None,
     ) -> DataFrame:
         """J3 accurate: interior fast path + boundary exact refinement.
         Result is identical to index_join; only the physical plan differs
-        (PIP runs on boundary-cell points only).
+        (PIP runs on boundary-cell points only). Two physical plans:
 
-        The gate queries and the bench run ``fused="auto"``, which since
-        r7 picks the HIERARCHICAL SPLIT plan for partial-aggregable ops
-        (count/sum/avg): interior membership resolves through chained
-        per-level broadcast hashmap probes entirely JVM-side, and only
-        the ~2% of points the boundary-only quadtree leaves unresolved
-        cross the Arrow boundary. The keyword's literal values select
-        explicit plans: ``fused=True`` (the signature default, kept for
-        API compatibility) is the one-pass fused mapInArrow
-        partial-vector kernel; ``fused="split"`` forces the split plan
-        (it scans the input TWICE — interior chain and boundary
-        semi-join are separate consumers); ``fused=False`` keeps the
-        pair-materializing broadcast-join plan (same rows, useful for
-        plan comparison and per-point outputs). All variants return
-        identical results.
+        - ``fused=True`` (the signature default; the flagship and the
+          ``spatial_hybrid_*`` gate queries, QueryEngine and the bench's
+          fused rows run it): the one-pass mapInArrow partial-vector
+          kernel (:meth:`_fused_agg`). Every point crosses the Arrow
+          boundary once; interior cells resolve by CSR lookup, boundary
+          cells by the exact PIP kernel.
+        - ``fused="split"`` (the ``spatial_split_*`` gate queries) and
+          ``fused="auto"`` (bench.py's split row): the HIERARCHICAL
+          split (:meth:`_split_agg`). Interior membership resolves
+          through chained per-level broadcast hashmap probes entirely
+          JVM-side, and only the ~2% of points the boundary-only
+          quadtree leaves unresolved cross the Arrow boundary; it scans
+          the input TWICE (interior chain and boundary semi-join are
+          separate consumers). It beat the fused kernel only at the
+          1.6B-row stratum on 32 cores (best-of-3 17.2s vs 20.8s,
+          BENCH/split_ab.jsonl); at sf0.1 on 4 cores the fused kernel
+          is ~7x faster.
+
+        Any other ``fused`` value raises ValueError.
 
         Hierarchical-split exactness additionally assumes INTEGRAL point
         coordinates (the engine's canonical integer-microdegree space,
@@ -801,63 +642,29 @@ class SpatialJoin:
         non-integral coords should pass ``fused=True`` (the fused kernel
         and single-level split carry no such data precondition).
 
-        ``fused="auto"`` applies the measured decision rule, re-derived
-        in round 7 (BENCH/split_ab.jsonl): for partial-aggregable ops
-        the HIERARCHICAL split is the plan — the boundary-only quadtree
-        refinement drops the Arrow-fed share to ~2% of points (1.97%
-        on the bench fixture vs 34.5% on its classification grid), and
-        with the r7 direct-probe interior (no per-cell partial agg)
-        split beat the fused kernel on UNCACHED input at the 1.6B-row
-        stratum (recorded best-of-3: 17.2s vs 20.8s, local[32]; the
-        round-3 rule's "split loses uncached" was an artifact of the
-        old groupBy(cell_id) interior and the flat k-refinement's giant
-        probe maps). The fused one-pass kernel remains for non-hier-
-        safe geometries (non-dyadic grids fall back inside _split_agg
-        to the single-level split, still exact) and as the explicit
-        ``fused=True`` plan.
+        ``coord_transfer`` (None | "packed") sets how coordinates cross
+        the Arrow boundary. None ships the columns' own type; "packed"
+        ships both int32-exact coordinates in one int64 column — half
+        the bytes of float64 and half the per-row field count, the two
+        measured feed costs (BENCH/hybrid_rootcause.md). The kernel
+        widens back to float64, so results are bit-identical, provided
+        the coordinates ARE int32-exact integers. Nothing checks that:
+        non-integral coordinates are truncated and the answer is wrong.
 
         ``stats`` (optional dict) records the decision:
-        {"plan": "fused"|"split"|"pairs"|"jvm", "refine_k": int}."""
-        if fused == "auto":
-            if agg.op in ("count", "sum", "avg"):
-                fused = "split"
-            else:
-                # non-partial-aggregable op: the pair-materializing plan
-                # is the only executor — normalize so stats['plan']
-                # records the plan actually run, never the literal "auto"
-                fused = False
-        if stats is not None:
-            stats["plan"] = (
-                fused if isinstance(fused, str) else ("fused" if fused else "pairs")
+        {"plan": "fused"|"split", "refine_k": int}."""
+        if fused is not True and fused not in ("split", "auto"):
+            raise ValueError(f"fused must be True, 'split' or 'auto', got {fused!r}")
+        if coord_transfer not in (None, "packed"):
+            raise ValueError(
+                f"coord_transfer must be None or 'packed', got {coord_transfer!r}"
             )
+        if stats is not None:
+            stats["plan"] = "fused" if fused is True else "split"
             stats["refine_k"] = self.refine_k
-        if fused == "split" and agg.op in ("count", "sum", "avg"):
-            return self._split_agg(points, agg, include_zero, coord_transfer)
-        if fused == "jvm":
-            # all-JVM exact plan: interior broadcast join + boundary
-            # broadcast join filtered by the unrolled PIP expression.
-            # Zero python operators — but measured ~3x SLOWER than the
-            # Arrow kernel path (giant CASE expression trees evaluate
-            # poorly); kept as the no-python fallback for environments
-            # without Arrow workers, not as the default. Above the
-            # pip_col viability bound the unrolled expression is not
-            # even constructible — fall back to the fused Arrow kernel.
-            if self.polyset.n_polys > PIP_COL_MAX_POLYS:
-                import warnings
-
-                warnings.warn(
-                    f"fused='jvm' unavailable for {self.polyset.n_polys} "
-                    f"polygons (> {PIP_COL_MAX_POLYS}); falling back to "
-                    "the fused Arrow kernel",
-                    stacklevel=2,
-                )
-            else:
-                return self._finalize(
-                    self._exact_pairs(points, jvm_pip=True), agg, include_zero
-                )
-        if fused and agg.op in ("count", "sum", "avg"):
+        if fused is True:
             return self._fused_agg(points, agg, include_zero, coord_transfer)
-        return self._finalize(self._exact_pairs(points), agg, include_zero)
+        return self._split_agg(points, agg, include_zero, coord_transfer)
 
     # --------------------------- hierarchical boundary-only refinement
     #
@@ -997,42 +804,22 @@ class SpatialJoin:
             )
         return out
 
-    def _bc_art_hier(self, levels) -> object:
+    def _bc_art_hier(self, levels):
         """Broadcast kernel artifact for the hierarchical split's Arrow
         stage: the DEEPEST level's boundary-pair CSR (sparse-keyed; deep
         grids exceed the dense-index bound) — exactly the pairs the JVM
         chain could not resolve, so kernel PIP neither double-counts a
         JVM-resolved (point, poly) nor misses an unresolved one."""
-        key = (
-            id(self.spark),
-            self.polyset.cache_token,
-            self.grid,
-            np.dtype(self.dtype).char,
-            self.refine_k,
-            "hier",
-            self.HIER_FACTORS,
-        )
-        bc = self._BC_CACHE.pop(key, None)
-        if bc is not None:
-            self._BC_CACHE[key] = bc
-            return bc
         deep_grid, _, _, b_c, b_p = levels[-1]
-        bc = self.spark.sparkContext.broadcast(
-            {
+        return self._bc_cached(
+            ("hier", self.HIER_FACTORS),
+            lambda: {
                 "interior": None,
                 "boundary": _cell_csr(b_c, b_p, deep_grid.n_cells),
                 "verts": self.polyset.verts,
                 "offsets": self.polyset.offsets,
-            }
+            },
         )
-        while len(self._BC_CACHE) >= self._BC_CACHE_MAX:
-            old = self._BC_CACHE.pop(next(iter(self._BC_CACHE)))
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass
-        self._BC_CACHE[key] = bc
-        return bc
 
     def _split_agg(
         self,
@@ -1089,16 +876,11 @@ class SpatialJoin:
             poly_cols.append(F.when(F.col(f"_hp{i}") >= 0, F.col(f"_hp{i}")))
             descending = F.col(f"_hp{i}") == -1
 
-        sum_col = (
-            F.sum(F.col(agg.col)).alias("_sum")
-            if agg.col
-            else F.lit(None).cast("double").alias("_sum")
-        )
         jvm_part = (
             chained.withColumn("poly_id", F.coalesce(*poly_cols))
             .filter(F.col("poly_id").isNotNull())
             .groupBy("poly_id")
-            .agg(F.count(F.lit(1)).alias("_cnt"), sum_col)
+            .agg(*agg.partials())
         )
         # Boundary sink: membership probes on the boundary-cell sets —
         # no marker chain needed, because nesting makes descent
@@ -1164,15 +946,7 @@ class SpatialJoin:
         )
         partials = jvm_part.unionByName(py_part)
         out = partials.groupBy("poly_id").agg(*agg.exprs())
-        if not include_zero:
-            return out
-        all_polys = self.spark.range(self.polyset.n_polys).withColumnRenamed(
-            "id", "poly_id"
-        )
-        fill = F.lit(0) if agg.op == "count" else F.lit(None)
-        return all_polys.join(F.broadcast(out), "poly_id", "left").select(
-            "poly_id", F.coalesce(F.col(agg.alias), fill).alias(agg.alias)
-        )
+        return self._densify(out, agg, include_zero)
 
     def _fused_agg(
         self,
@@ -1183,38 +957,19 @@ class SpatialJoin:
     ) -> DataFrame:
         """One-pass exact aggregation — the plan we'd run at 100 TB.
 
-        mapInPandas over (x, y[, val]): per Arrow batch, resolve interior
+        mapInArrow over (x, y[, val]): per Arrow batch, resolve interior
         membership by CSR lookup of the cell, boundary membership by the
         exact PIP kernel, and emit a PARTIAL per-polygon vector (<=P rows
         per batch). The exchange then carries #batches x P rows instead of
         O(points) pair rows — the reference's per-thread partial vectors
         (CPUJoin/CPUJoin.cpp:93-116) in Spark clothes. No JVM-side pair
-        materialization, half the Arrow traffic of the join plan.
-
-        ``coord_transfer`` ("int" | "float" | "packed" | None): the
-        Arrow feed is the bandwidth-dominant term at full machine width,
-        so a caller who KNOWS the coordinates are losslessly
-        representable in a narrower type (e.g. integer microdegrees, the
-        engine's canonical coordinate space, fit int32 exactly) can
-        halve the transfer bytes ("int"), or additionally halve the
-        per-row FIELD count ("packed": both int32 coords in one int64
-        column — Spark's MapInBatch wrap cost is per field, see
-        BENCH/hybrid_rootcause.md); the kernel always widens back to
-        float64, so results are bit-identical. Default None transfers
-        the column's own type.
+        materialization. ``coord_transfer``: see :meth:`hybrid_join`.
         """
         partials = self._arrow_partials(
             points, agg, use_interior=True, coord_transfer=coord_transfer
         )
-        n_polys = self.polyset.n_polys
         out = partials.groupBy("poly_id").agg(*agg.exprs())
-        if not include_zero:
-            return out
-        all_polys = self.spark.range(n_polys).withColumnRenamed("id", "poly_id")
-        fill = F.lit(0) if agg.op == "count" else F.lit(None)
-        return all_polys.join(F.broadcast(out), "poly_id", "left").select(
-            "poly_id", F.coalesce(F.col(agg.alias), fill).alias(agg.alias)
-        )
+        return self._densify(out, agg, include_zero)
 
     def _arrow_partials(
         self,
@@ -1375,12 +1130,6 @@ class SpatialJoin:
                 F.col(x_name).cast("long").bitwiseAND(F.lit(0xFFFFFFFF))
             )
             src = points.select(xy.alias("_xy"), *cols[2:])
-        elif coord_transfer:
-            src = points.select(
-                F.col(x_name).cast(coord_transfer).alias(x_name),
-                F.col(y_name).cast(coord_transfer).alias(y_name),
-                *cols[2:],
-            )
         else:
             src = points.select(*cols)
         if src.rdd.getNumPartitions() > 2 * target:
@@ -1400,15 +1149,7 @@ class SpatialJoin:
         cells = self._cell_partials(points, agg)
         per_poly = cells.join(F.broadcast(cover), "cell_id", "inner")
         out = per_poly.groupBy("poly_id").agg(*agg.exprs())
-        if not include_zero:
-            return out
-        all_polys = self.spark.range(self.polyset.n_polys).withColumnRenamed(
-            "id", "poly_id"
-        )
-        fill = F.lit(0) if agg.op == "count" else F.lit(None)
-        return all_polys.join(F.broadcast(out), "poly_id", "left").select(
-            "poly_id", F.coalesce(F.col(agg.alias), fill).alias(agg.alias)
-        )
+        return self._densify(out, agg, include_zero)
 
     def error_bounds(self, points: DataFrame) -> DataFrame:
         """J4: raster count plus per-polygon error intervals.

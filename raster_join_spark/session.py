@@ -26,7 +26,7 @@ def get_spark(
     reference absorbs skew with GPU atomics (RasterJoin/join/RasterJoin.cpp),
     we absorb it with AQE skew-join + explicit salting (operators/spatial_join).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         # match parallelism in local mode; a real cluster would use 2-3x cores

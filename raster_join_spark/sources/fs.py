@@ -188,7 +188,15 @@ class HadoopFS:
         on S3A conditional-write stores; FileAlreadyExistsException maps
         to FileExistsError so the store's ConcurrentCommitError path is
         backend-independent. ``tmp`` is unused (no link(2) here — the
-        exclusive create is already the commit point)."""
+        exclusive create is already the commit point).
+
+        Precondition: a file created here stays immutable until the
+        read-back below has established ownership. The read-back
+        compares content, so a legitimate rewrite of ``path`` (e.g. by
+        :meth:`replace_text`) in between makes the true winner raise
+        FileExistsError, and two racers writing identical bytes both
+        conclude they won. TileStore CAS-creates only snapshot manifests
+        (``snap-N.json``), which nothing rewrites once committed."""
         from py4j.protocol import Py4JJavaError
 
         try:

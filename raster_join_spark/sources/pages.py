@@ -121,8 +121,10 @@ def points_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     regressed every consumer that is not python-CPU-bound (measured
     spatial_split_count 1.8s -> 15.7s at sf1.0: the exchange below the
     chained broadcast probes breaks their single codegen'd pipeline).
-    Operators that re-scan this expensive projection fix parallelism
-    at their own persist boundary instead — see knn.py.)"""
+    Nothing repartitions it instead: the scan stays one task. Operators
+    that re-scan this expensive projection persist a narrow projection
+    of it (knn.py), which saves the repeated regex work but keeps the
+    single partition.)"""
     spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView("events")
     # `text` rides along for the byte-identity invariant; Catalyst prunes
     # it out of every plan that doesn't select it (tests/test_plans.py)

@@ -73,8 +73,8 @@ def test_fused_hybrid_minimal_exchanges(spark, sf_dir, sj):
 
 
 def test_split_plan_shape(spark, sf_dir, sj):
-    """Pin the hierarchical split plan (the fused='auto' default
-    accurate path since r7, r7-verdict item 2): every probe/membership
+    """Pin the hierarchical split plan (what fused='auto' selects,
+    r7-verdict item 2): every probe/membership
     join is a BroadcastHashJoin (never a SortMergeJoin — a stats
     regression silently shuffling the point side would only show up in
     a bench round otherwise), the Arrow kernel appears exactly once

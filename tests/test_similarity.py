@@ -65,6 +65,21 @@ def test_brute_force_topk_exact(spark, emb, emb_pdf):
     assert got["rank"].tolist() == list(range(1, 11))
 
 
+def test_nonfinite_query_vector_rejected(spark, emb):
+    """A NaN or inf coefficient has no SQL literal; it must fail as a
+    ValueError naming the value, not as a ParseException on ``nanD``."""
+    q = np.ones(16)
+    q[3] = np.nan
+    with pytest.raises(ValueError, match="nan"):
+        S.brute_force_topk(emb, q, k=10)
+    with pytest.raises(ValueError, match="nan"):
+        S.dot_sql("embedding", q)
+    planes = np.ones((2, 16))
+    planes[1, 0] = np.inf
+    with pytest.raises(ValueError, match="inf"):
+        S.lsh_bucket_col("embedding", planes)
+
+
 def test_lsh_topk_recall(spark, emb, emb_pdf):
     """ANN with multi-probe: recall@10 >= 0.6 vs brute force on this
     fixture (seeded, deterministic)."""

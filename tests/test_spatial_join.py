@@ -210,15 +210,6 @@ def test_coarse_scan_superset_then_exact(spark, points_df, polyset, grid, random
     assert n_exact_df == int(exact_mask.sum())
 
 
-def test_jvm_pip_mode_equals_fused(spark, points_df, polyset, grid, random_points):
-    """The all-JVM unrolled-PIP plan (fused='jvm') produces identical
-    results to the Arrow kernel plan."""
-    sj = SpatialJoin(spark, polyset, grid)
-    a = sj.hybrid_join(points_df).orderBy("poly_id").toPandas()
-    b = sj.hybrid_join(points_df, fused="jvm").orderBy("poly_id").toPandas()
-    assert a["agg"].tolist() == b["agg"].tolist()
-
-
 def test_split_mode_equals_fused(spark, points_df, polyset, grid):
     """fused='split' (interior resolved JVM-side, only boundary-cell
     points through Arrow) must match the one-pass kernel plan exactly
@@ -276,6 +267,37 @@ def test_fused_auto_selection(spark, points_df, polyset, random_points):
     a = got.orderBy("poly_id").toPandas()
     b = sj.hybrid_join(points_df).orderBy("poly_id").toPandas()
     assert a["agg"].tolist() == b["agg"].tolist()
+
+
+def test_aggspec_rejects_unknown_op_and_missing_col():
+    """The plans branch on op with avg as the fall-through, so an op
+    outside count|sum|avg would run as AVG, and sum/avg without a column
+    would sum NULLs; both must fail at construction."""
+    for op, col in (("max", "val"), ("min", None), ("sum", None), ("avg", None)):
+        with pytest.raises(ValueError):
+            AggSpec(op, col)
+    for op, col in (("count", None), ("sum", "val"), ("avg", "val")):
+        assert AggSpec(op, col).op == op
+
+
+def test_hybrid_join_plan_domain(spark, points_df, polyset, grid):
+    """hybrid_join has two physical plans: fused=True runs the fused
+    kernel, "split" and "auto" the split; stats["plan"] names the plan
+    that runs. Any other fused or coord_transfer value is refused rather
+    than silently run as the fused kernel."""
+    sj = SpatialJoin(spark, polyset, grid)
+    for fused, plan in ((True, "fused"), ("split", "split"), ("auto", "split")):
+        stats: dict = {}
+        sj.hybrid_join(points_df, fused=fused, stats=stats)
+        assert stats["plan"] == plan, fused
+    for fused in ("splt", "jvm", False, None, 1):
+        stats = {}
+        with pytest.raises(ValueError, match="fused"):
+            sj.hybrid_join(points_df, fused=fused, stats=stats)
+        assert stats == {}
+    for mode in ("int", "float"):
+        with pytest.raises(ValueError, match="coord_transfer"):
+            sj.hybrid_join(points_df, coord_transfer=mode)
 
 
 @pytest.fixture(scope="module")
@@ -414,42 +436,6 @@ def test_rect_polyset_pip_equals_closed_form():
         assert not pip_mask(px[i : i + 1], py[i : i + 1], ps.poly_verts(p))[0]
 
 
-def test_pip_col_guard_and_jvm_fallback(spark):
-    """pip_col must refuse to unroll >512 polygons; hybrid_join('jvm')
-    falls back to the fused Arrow kernel and stays exact."""
-    import warnings
-
-    import numpy as np
-    import pandas as pd
-    import pytest
-    from pyspark.sql import functions as F
-
-    from raster_join_spark.fixtures import COARSE_GRID, X0, X1, Y0, Y1, rect_polyset
-    from raster_join_spark.operators.spatial_join import SpatialJoin
-
-    ps = rect_polyset(32)  # 1024 polys > PIP_COL_MAX_POLYS
-    sj = SpatialJoin(spark, ps, COARSE_GRID)
-    with pytest.raises(ValueError, match="pip_col"):
-        sj.pip_col(F.lit(0))
-    rng = np.random.RandomState(7)
-    pdf = pd.DataFrame(
-        {
-            "x": np.round(rng.uniform(X0, X1, 3000)),
-            "y": np.round(rng.uniform(Y0, Y1, 3000)),
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        got = sj.hybrid_join(df, fused="jvm").toPandas()
-    assert any("falling back" in str(x.message) for x in w)
-    exp = sj.hybrid_join(df, fused=True).toPandas()
-    pd.testing.assert_frame_equal(
-        got.sort_values("poly_id", ignore_index=True),
-        exp.sort_values("poly_id", ignore_index=True),
-    )
-
-
 def test_float32_decision_diff():
     """Documents the float32-vs-float64 PIP decision diff on the fixture
     distribution (100k synthesized points x 16 oracle polygons). float32
@@ -480,19 +466,16 @@ def test_float32_decision_diff():
 
 
 def test_coord_transfer_modes_identical(spark, points_df, polyset, grid):
-    """int/packed/float64 transfer modes must be bit-identical — the
+    """The packed transfer must be bit-identical to the float64 one — the
     packed int64 (y<<32 | x&0xffffffff) round-trips negative x."""
-    from raster_join_spark.operators.spatial_join import AggSpec, SpatialJoin
-
     sj = SpatialJoin(spark, polyset, grid)
     base = sj.hybrid_join(points_df, AggSpec("sum", "val", "agg")).toPandas()
-    for mode in ("int", "packed"):
-        got = sj.hybrid_join(
-            points_df, AggSpec("sum", "val", "agg"), coord_transfer=mode
-        ).toPandas()
-        assert got.sort_values("poly_id", ignore_index=True).equals(
-            base.sort_values("poly_id", ignore_index=True)
-        ), mode
+    got = sj.hybrid_join(
+        points_df, AggSpec("sum", "val", "agg"), coord_transfer="packed"
+    ).toPandas()
+    assert got.sort_values("poly_id", ignore_index=True).equals(
+        base.sort_values("poly_id", ignore_index=True)
+    )
 
 
 def test_refinement_auto_and_equivalence(spark):
@@ -545,37 +528,6 @@ def test_refinement_auto_and_equivalence(spark):
     assert SpatialJoin(spark, big, coarse).refine_k == 1
 
 
-def test_sampled_boundary_fraction_detects_skew(spark, polyset):
-    """Round-4 verdict item 5: the pure pair-count boundary estimate is
-    blind to WHERE the points are. A hot box parked on a polygon
-    boundary keeps the pair-count ratio < 0.15 while most points
-    actually need PIP — the sampled point-weighted estimate must see
-    that. (Since the r7 auto rule the estimator no longer gates plan
-    selection — split wins at every measured fraction — but it remains
-    the diagnostic that exposed the r6 rule's blind spot and feeds the
-    A/B tooling, so its skew sensitivity stays pinned.)"""
-    fine = GridSpec(0.0, 0.0, 5.0, 5.0, 200, 200)
-    sj = SpatialJoin(spark, polyset, fine)
-    assert sj.tables.boundary_fraction() < 0.15
-
-    # park 85% of the points in a 4-unit hot box centred on the first
-    # polygon's first vertex (a guaranteed boundary cell)
-    vx, vy = float(polyset.verts[0, 0]), float(polyset.verts[0, 1])
-    rng = np.random.RandomState(17)
-    n_hot, n_cold = 3400, 600
-    x = np.r_[vx + rng.uniform(-2, 2, n_hot), rng.uniform(0, 1000, n_cold)]
-    y = np.r_[vy + rng.uniform(-2, 2, n_hot), rng.uniform(0, 1000, n_cold)]
-    df = spark.createDataFrame(pd.DataFrame({"x": x, "y": y}))
-
-    cached = df.persist()
-    try:
-        cached.count()
-        bfrac = sj._sampled_boundary_fraction(cached)
-        assert bfrac >= 0.15  # skew detected where pair counts said < 0.15
-    finally:
-        cached.unpersist()
-
-
 def test_boundary_fraction_cell_weights():
     """classify-side unit check of the weighted estimator: loading all
     the weight onto boundary cells drives the fraction toward 1, onto
@@ -616,43 +568,3 @@ def test_boundary_fraction_empty_histogram():
         cell_weights=(np.array([], np.int64), np.array([], np.float64))
     )
     assert got == base
-
-
-def test_sampled_boundary_fraction_cached_table_disjoint_points(spark, polyset):
-    """The weight table is usually served from _PAIRS_CACHE; when the
-    sample (and the full-scan retry) then lands ZERO covered points,
-    the fallback must use self.cls_tables — the old code referenced a
-    local bound only in the cache-miss branch and raised NameError."""
-    fine = GridSpec(0.0, 0.0, 5.0, 5.0, 200, 200)
-    sj = SpatialJoin(spark, polyset, fine)
-
-    rng = np.random.RandomState(23)
-    inside = spark.createDataFrame(
-        pd.DataFrame(
-            {"x": rng.uniform(0, 1000, 500), "y": rng.uniform(0, 1000, 500)}
-        )
-    ).persist()
-    # far outside every polygon-covered cell but inside the grid extent
-    # is impossible for this fixture, so use coords beyond the polygons'
-    # reach within the grid: the corner region [990, 1000)^2 may still
-    # touch covered cells, so go fully off-polygon via y in the empty band
-    outside = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "x": np.full(300, -50.0),  # off-grid -> cell_id NULL
-                "y": np.full(300, -50.0),
-            }
-        )
-    ).persist()
-    try:
-        inside.count(), outside.count()
-        # first call populates _PAIRS_CACHE (cache-miss branch binds t)
-        sj._sampled_boundary_fraction(inside)
-        # second call on a fresh SpatialJoin hits the cache; zero covered
-        # points -> must fall back to the pair-count ratio, not NameError
-        sj2 = SpatialJoin(spark, polyset, fine)
-        got = sj2._sampled_boundary_fraction(outside)
-        assert got == sj2.cls_tables.boundary_fraction()
-    finally:
-        inside.unpersist()
-        outside.unpersist()

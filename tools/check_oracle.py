@@ -24,7 +24,8 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None) -
     from raster_join_spark.session import get_spark
     import __spark_entry__ as e
 
-    spark = get_spark(app_name="check-oracle", master="local[8]", shuffle_partitions=16)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    spark = get_spark(app_name="check-oracle", master=f"local[{cpus}]", shuffle_partitions=16)
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
